@@ -170,17 +170,15 @@ object Layout {
     * `shuffle=false` (default) coalesces — a NARROW rewrite, no
     * shuffle: adjacent input splits concatenate into fewer files.
     * `shuffle=true` repartitions for an even rebalance when input sizes
-    * are skewed. Commit is write-new → swap via rename with the old
-    * data parked aside until the new layout is in place; readers racing
-    * the two renames can observe a missing directory — orchestrated
-    * loads go through EtlPipeline's staged-swap protocol instead, this
-    * is the standalone maintenance op.
+    * are skewed. The new layout commits through
+    * [[graft.sink.TableCommit]], so `path` may be a whole table or one
+    * `col=value` partition of one.
     */
   def compact(spark: org.apache.spark.sql.SparkSession, path: String,
               targetBytes: Long, shuffle: Boolean = false): CompactionReport = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
+    graft.sink.TableCommit.recover(spark, path)
     val root = new org.apache.hadoop.fs.Path(path)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     def dataFiles(p: org.apache.hadoop.fs.Path): Seq[org.apache.hadoop.fs.FileStatus] =
       fs.listStatus(p).toIndexedSeq.flatMap { st =>
         val n = st.getPath.getName
@@ -193,35 +191,22 @@ object Layout {
     val nOut = math.max(1, math.ceil(bytesBefore.toDouble / targetBytes).toInt)
     val df = spark.read.parquet(path)
     val out = if (shuffle) df.repartition(nOut) else df.coalesce(nOut)
-    // DOT-prefixed work dirs: when `path` is a partition inside a
-    // table, a crash-leftover `col=v__compact_old` sibling would parse
-    // as a partition and silently re-introduce the stale rows — hidden
-    // (dot) names are skipped by readers in any position
-    val tmp = new org.apache.hadoop.fs.Path(root.getParent,
-      s".${root.getName}__compact_new")
-    val old = new org.apache.hadoop.fs.Path(root.getParent,
-      s".${root.getName}__compact_old")
-    fs.delete(tmp, true); fs.delete(old, true)
-    out.write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(tmp.toString)
-    require(fs.rename(root, old), s"compact: could not park $root")
-    require(fs.rename(tmp, root), s"compact: could not promote $tmp")
-    fs.delete(old, true)
+    graft.sink.TableCommit.replaceTable(out, path)
     val after = dataFiles(root)
     CompactionReport(before.size, bytesBefore, after.size, after.map(_.getLen).sum)
   }
 
   /** Per-partition compaction of a `col=value`-partitioned table: each
-    * leaf partition bin-packs independently (and its swap is
-    * independent — a reader never sees a half-compacted partition
-    * disappear with the whole table). Driver loop is O(partitions) job
-    * submissions, the standard shape for an OPTIMIZE pass; filter the
-    * partition list upstream to compact only recently-written dates.
+    * leaf partition bin-packs and commits independently. Driver loop is
+    * O(partitions) job submissions, the standard shape for an OPTIMIZE
+    * pass; filter the partition list upstream to compact only
+    * recently-written dates.
     */
   def compactPartitions(spark: org.apache.spark.sql.SparkSession, path: String,
                         targetBytes: Long): Map[String, CompactionReport] = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    fs.listStatus(new org.apache.hadoop.fs.Path(path)).toIndexedSeq
+    graft.sink.TableCommit.recover(spark, path)
+    val root = new org.apache.hadoop.fs.Path(path)
+    root.getFileSystem(spark.sparkContext.hadoopConfiguration).listStatus(root).toIndexedSeq
       .filter(st => st.isDirectory && st.getPath.getName.contains("="))
       .map { st =>
         st.getPath.getName -> compact(spark, st.getPath.toString, targetBytes)

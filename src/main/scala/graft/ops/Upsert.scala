@@ -1,8 +1,10 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+
+import graft.sink.TableCommit
 
 /** Keyed source-wins upsert — the engine's flagship non-builtin operator
   * (SURVEY.md §2.7 Q45–Q47, §4.3).
@@ -25,8 +27,8 @@ import org.apache.spark.sql.functions._
   * Scale notes (100 TB): the anti-join shuffles both sides on the key
   * unless the updates side is broadcastable — daily increments usually
   * are, and AQE converts the anti-join to broadcast at runtime when the
-  * updates side is small. For the table-rewrite sink, partition the
-  * target by date so a daily upsert rewrites only touched partitions
+  * updates side is small. For a table on disk, partition the target by
+  * date so a daily upsert rewrites only touched partitions
   * ([[upsertPartitioned]]).
   */
 object Upsert {
@@ -80,9 +82,11 @@ object Upsert {
   }
 
   /** Upsert into a parquet table on disk, rewriting only the date
-    * partitions the updates batch touches (dynamic partition overwrite).
-    * This is the O(delta) path that makes daily sync viable at 100 TB —
-    * the naive alternative rewrites the whole table (§7.4).
+    * partitions the updates batch touches. This is the O(delta) path
+    * that makes daily sync viable at 100 TB — the naive alternative
+    * rewrites the whole table (§7.4). The write commits through
+    * [[graft.sink.TableCommit]]: every touched partition changes, or
+    * none does.
     *
     * CONTRACT: the partition column must be stable per key (a key never
     * moves between partitions — true for the reference's facts, keyed
@@ -90,14 +94,6 @@ object Upsert {
     * a key to a new partition value would leave the old row in its
     * untouched partition; use the full-table [[upsert]] for mutable
     * partition columns.
-    *
-    * CRASH MODEL: dynamic partition overwrite's commit has a window
-    * where a touched partition's old files are deleted before the new
-    * ones land. That is acceptable ONLY in replayable contexts (the
-    * streaming upsert sink replays the micro-batch from its checkpoint;
-    * the merge is idempotent). Non-replayable batch orchestration goes
-    * through `EtlPipeline.loadPartitioned`, which stages the delta and
-    * swaps each partition with a rename-old-aside protocol instead.
     */
   def upsertPartitioned(
       spark: SparkSession,
@@ -106,35 +102,27 @@ object Upsert {
       keys: Seq[String],
       partitionCol: String
   ): Unit = {
-    // O(distinct partition values in the batch) at the driver — bounded
-    // by construction for date-partitioned daily syncs
-    val touched = updates.select(partitionCol).distinct().collect().map(_.get(0))
-    // null partition values land in the default partition and ARE
-    // rewritten by dynamic overwrite — `isin` would silently skip them
-    // (null never matches), dropping pre-existing null-partition rows
-    val (nullTouched, valsTouched) = touched.partition(_ == null)
-    val touchedPred = {
-      val in =
-        if (valsTouched.nonEmpty) Some(col(partitionCol).isin(valsTouched.toIndexedSeq: _*))
-        else None
-      val nl = if (nullTouched.nonEmpty) Some(col(partitionCol).isNull) else None
-      (in ++ nl).reduceOption(_ || _).getOrElse(lit(false))
-    }
     // explicit existence check: a transient read failure must abort the
     // merge (rethrowing), not silently drop pre-existing partition rows
-    val fsCheck = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    val tableIsThere = fsCheck.exists(new org.apache.hadoop.fs.Path(tablePath))
-    val merged =
-      if (!tableIsThere) updates
-      else {
-        val existing = spark.read.parquet(tablePath).filter(touchedPred)
-        upsert(existing, updates, keys)
+    if (!TableCommit.recover(spark, tablePath))
+      TableCommit.replaceTable(updates, tablePath, Some(partitionCol))
+    else {
+      // O(distinct partition values in the batch) at the driver —
+      // bounded by construction for date-partitioned daily syncs
+      val touched = updates.select(partitionCol).distinct().collect().map(_.get(0))
+      // null partition values land in the default partition and are
+      // replaced with it — `isin` would silently skip them (null never
+      // matches), dropping pre-existing null-partition rows
+      val (nullTouched, valsTouched) = touched.partition(_ == null)
+      val touchedPred = {
+        val in =
+          if (valsTouched.nonEmpty) Some(col(partitionCol).isin(valsTouched.toIndexedSeq: _*))
+          else None
+        val nl = if (nullTouched.nonEmpty) Some(col(partitionCol).isNull) else None
+        (in ++ nl).reduceOption(_ || _).getOrElse(lit(false))
       }
-    merged.write
-      .mode(SaveMode.Overwrite)
-      .partitionBy(partitionCol)
-      .option("partitionOverwriteMode", "dynamic")
-      .parquet(tablePath)
+      val existing = spark.read.parquet(tablePath).filter(touchedPred)
+      TableCommit.replacePartitions(upsert(existing, updates, keys), tablePath, partitionCol)
+    }
   }
 }

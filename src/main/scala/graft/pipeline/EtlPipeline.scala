@@ -2,10 +2,12 @@ package graft.pipeline
 
 import java.time.LocalDateTime
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.ops.Upsert
 import graft.schema.Schemas
+import graft.sink.TableCommit
 import graft.sync.Incremental
 
 /** End-to-end orchestration of the reference's daily sync
@@ -56,115 +58,42 @@ final class EtlPipeline(spark: SparkSession, warehouseDir: String) {
       case Some((srcCol, pCol)) if reconciled.columns.contains(srcCol) =>
         loadPartitioned(name, reconciled, keys, srcCol, pCol)
       case _ =>
-        loadFullRewrite(name, reconciled, keys, partitionCol = None)
+        loadFullRewrite(name, reconciled, keys)
     }
   }
 
   /** O(delta) fact load: derive the date partition column and merge only
     * the date partitions the batch touches (§7.4: a daily sessions sync
-    * at 100 TB must not rewrite 100 TB). A pre-partitioning warehouse
-    * (no partition column on disk) is migrated once through the
-    * full-rewrite swap path, written partitioned from then on.
-    *
-    * CRASH SAFETY: unlike raw dynamic partition overwrite (whose commit
-    * deletes a partition's old files before the new ones land — a crash
-    * window where that partition's data is simply GONE), the merged
-    * delta is staged to `<table>.__delta` with its _SUCCESS marker and
-    * then swapped in PER PARTITION with the same rename-old-aside
-    * protocol as [[swapWrite]]: every crash window leaves each touched
-    * partition either old, or new, or old-renamed-to-`.graft_old_*`
-    * (which [[recoverPartitionSwaps]] restores on the next load). Backup
-    * dirs carry a leading dot so Spark's file listing never reads them
-    * (an underscore prefix is NOT enough: a dir containing `=` is still
-    * parsed as a partition column and conflicts). A leftover stage dir is deleted, not replayed — the
-    * upsert is idempotent and the next sync regenerates it.
+    * at 100 TB must not rewrite 100 TB) through
+    * [[Upsert.upsertPartitioned]]. A pre-partitioning warehouse (data
+    * files at the table root, no partition directories) is migrated
+    * once by a full merge, written partitioned from then on.
     */
   private def loadPartitioned(name: String, batch: DataFrame, keys: Seq[String],
                               srcCol: String, pCol: String): Unit = {
     import org.apache.spark.sql.functions.{col, to_date}
     val path = tablePath(name)
-    recoverInterruptedSwap(path)
-    recoverPartitionSwaps(path)
     val withP = batch.withColumn(pCol, to_date(col(srcCol)))
-    val needsMigration =
-      pathExists(path) && !spark.read.parquet(path).columns.contains(pCol)
-    if (needsMigration) {
-      // one-time migration of a pre-partitioning warehouse: derive the
-      // partition column on the existing table too, full merge, swap
+    if (TableCommit.recover(spark, path) && !partitionedBy(path, pCol)) {
       val existing = spark.read.parquet(path)
         .withColumn(pCol, to_date(col(srcCol)))
-      val merged = Upsert.upsert(existing,
-        withP.select(existing.columns.map(col).toIndexedSeq: _*), keys)
-      swapWrite(path, merged, partitionCol = Some(pCol))
-      return
-    }
-    val fs = hadoopFs
-    val stage = s"$path.__delta"
-    fs.delete(new org.apache.hadoop.fs.Path(stage), true)
-    if (!pathExists(path)) {
-      // first write: plain partitioned table via the swap (atomic)
-      swapWrite(path, withP, partitionCol = Some(pCol))
-      return
-    }
-    // merge against ONLY the touched partitions (null partition values
-    // included — isin alone would skip them), stage the result
-    val touched = withP.select(col(pCol)).distinct().collect().map(_.get(0))
-    val (nullTouched, valsTouched) = touched.partition(_ == null)
-    val pred = {
-      val in =
-        if (valsTouched.nonEmpty)
-          Some(col(pCol).isin(valsTouched.toIndexedSeq: _*))
-        else None
-      val nl = if (nullTouched.nonEmpty) Some(col(pCol).isNull) else None
-      (in ++ nl).reduceOption(_ || _)
-        .getOrElse(org.apache.spark.sql.functions.lit(false))
-    }
-    val existing = spark.read.parquet(path).filter(pred)
-    val merged = Upsert.upsert(existing,
-      withP.select(existing.columns.map(col).toIndexedSeq: _*), keys)
-    merged.write.mode(SaveMode.Overwrite).partitionBy(pCol).parquet(stage)
-    require(fs.exists(new org.apache.hadoop.fs.Path(s"$stage/_SUCCESS")),
-      s"staged delta for $name is missing its _SUCCESS marker")
-    // swap each staged partition into the live table, old renamed aside
-    val staged = fs.listStatus(new org.apache.hadoop.fs.Path(stage))
-      .filter(s => s.isDirectory && s.getPath.getName.contains("="))
-    staged.foreach { st =>
-      val pname = st.getPath.getName
-      val dst = new org.apache.hadoop.fs.Path(s"$path/$pname")
-      val old = new org.apache.hadoop.fs.Path(s"$path/.graft_old_$pname")
-      fs.delete(old, true)
-      if (fs.exists(dst)) renameOrDie(fs, dst, old)
-      renameOrDie(fs, st.getPath, dst)
-      fs.delete(old, true)
-    }
-    fs.delete(new org.apache.hadoop.fs.Path(stage), true)
+      TableCommit.replaceTable(Upsert.upsert(existing, withP, keys), path, Some(pCol))
+    } else Upsert.upsertPartitioned(spark, path, withP, keys, pCol)
   }
 
-  /** Heal partition swaps interrupted mid-flight: a `.graft_old_<p>` backup
-    * beside a missing live partition is restored; beside a live one it
-    * is garbage-collected.
-    */
-  private def recoverPartitionSwaps(path: String): Unit = {
-    if (!pathExists(path)) return
-    val fs = hadoopFs
-    fs.listStatus(new org.apache.hadoop.fs.Path(path))
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith(".graft_old_"))
-      .foreach { st =>
-        val live = new org.apache.hadoop.fs.Path(
-          s"$path/${st.getPath.getName.stripPrefix(".graft_old_")}")
-        if (!fs.exists(live)) renameOrDie(fs, st.getPath, live)
-        else fs.delete(st.getPath, true)
-      }
+  private def partitionedBy(path: String, pCol: String): Boolean = {
+    val p = new Path(path)
+    fileSystem(p).listStatus(p)
+      .exists(st => st.isDirectory && st.getPath.getName.startsWith(s"$pCol="))
   }
 
   private def loadFullRewrite(name: String, reconciled: DataFrame,
-                              keys: Seq[String], partitionCol: Option[String]): Unit = {
+                              keys: Seq[String]): Unit = {
     val path = tablePath(name)
-    recoverInterruptedSwap(path)
     // existence is checked explicitly — a transient READ failure must
     // abort the merge, not silently replace the table with the batch
     val existing =
-      if (pathExists(path)) Some(spark.read.parquet(path)) else None
+      if (TableCommit.recover(spark, path)) Some(spark.read.parquet(path)) else None
     // GUARDRAIL: a full-table rewrite is O(table), not O(delta) — at
     // warehouse scale a daily sync through this path rewrites the whole
     // table every day. Tables above the size threshold REFUSE the
@@ -174,12 +103,11 @@ final class EtlPipeline(spark: SparkSession, warehouseDir: String) {
     // backfill). Threshold on the EXISTING table's on-disk bytes —
     // known before any work starts, no extra Spark job.
     existing.foreach { _ =>
-      val bytes = hadoopFs.getContentSummary(
-        new org.apache.hadoop.fs.Path(path)).getLength
-      val maxBytes = spark.conf
-        .get("spark.graft.etl.maxFullRewriteBytes", (64L << 30).toString).toLong
-      val forced = spark.conf
-        .get("spark.graft.etl.forceFullRewrite", "false").toBoolean
+      val p = new Path(path)
+      val bytes = fileSystem(p).getContentSummary(p).getLength
+      val maxBytes = setting("spark.graft.etl.maxFullRewriteBytes",
+        (64L << 30).toString)(_.toLongOption)
+      val forced = setting("spark.graft.etl.forceFullRewrite", "false")(_.toBooleanOption)
       if (bytes > maxBytes && !forced)
         throw new IllegalStateException(
           s"loadTable($name): full-table rewrite of $bytes bytes exceeds " +
@@ -188,73 +116,21 @@ final class EtlPipeline(spark: SparkSession, warehouseDir: String) {
             "partitioned merge, or set " +
             "spark.graft.etl.forceFullRewrite=true for a deliberate one-off.")
     }
-    val merged = existing match {
-      case Some(t) if t.columns.sameElements(reconciled.columns) =>
-        Upsert.upsert(t, reconciled, keys)
-      case Some(t) =>
-        Upsert.upsert(t, reconciled.select(t.columns.map(org.apache.spark.sql.functions.col).toIndexedSeq: _*), keys)
-      case None => reconciled
-    }
-    swapWrite(path, merged, partitionCol)
+    val merged = existing.fold(reconciled)(Upsert.upsert(_, reconciled, keys))
+    TableCommit.replaceTable(merged, path)
   }
 
-  /** Rewrite via temp dir: Spark can't overwrite a path it is reading.
-    * Swap order matters for crash safety: the old table is RENAMED
-    * aside (not deleted) before the new one moves in, so every crash
-    * window leaves either the old table, or a recoverable __new with
-    * its _SUCCESS marker — never nothing (recoverInterruptedSwap picks
-    * these up on the next run).
+  /** A malformed value fails naming the key and the value; it never
+    * falls back to the default.
     */
-  private def swapWrite(path: String, merged: DataFrame,
-                        partitionCol: Option[String]): Unit = {
-    val tmp = s"$path.__new"
-    val writer = merged.write.mode(SaveMode.Overwrite)
-    partitionCol.fold(writer)(c => writer.partitionBy(c)).parquet(tmp)
-    val fs = hadoopFs
-    val dst = new org.apache.hadoop.fs.Path(path)
-    val old = new org.apache.hadoop.fs.Path(s"$path.__old")
-    fs.delete(old, true)
-    if (fs.exists(dst)) renameOrDie(fs, dst, old)
-    renameOrDie(fs, new org.apache.hadoop.fs.Path(tmp), dst)
-    fs.delete(old, true)
+  private def setting[T](key: String, default: String)(parse: String => Option[T]): T = {
+    val raw = spark.conf.get(key, default)
+    parse(raw).getOrElse(
+      throw new IllegalArgumentException(s"$key: cannot parse value '$raw'"))
   }
 
-  /** Heal a swap interrupted mid-flight: a completed __new (has
-    * _SUCCESS) with no live table is promoted; a leftover __old beside
-    * a live table is garbage-collected; an orphaned __old with NO live
-    * table is restored.
-    */
-  private def recoverInterruptedSwap(path: String): Unit = {
-    val fs = hadoopFs
-    val dst = new org.apache.hadoop.fs.Path(path)
-    val neu = new org.apache.hadoop.fs.Path(s"$path.__new")
-    val old = new org.apache.hadoop.fs.Path(s"$path.__old")
-    if (!fs.exists(dst)) {
-      if (fs.exists(new org.apache.hadoop.fs.Path(s"$path.__new/_SUCCESS"))) {
-        renameOrDie(fs, neu, dst) // crash after old moved aside, before promote
-        fs.delete(old, true)
-      } else if (fs.exists(old)) {
-        renameOrDie(fs, old, dst) // crash before a complete __new existed
-      }
-    } else {
-      fs.delete(old, true)
-      fs.delete(neu, true)
-    }
-  }
-
-  private def hadoopFs =
-    org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-
-  /** Hadoop FileSystem.rename reports most failures by RETURNING FALSE
-    * (missing src, missing dst parent, quota, cross-FS), not throwing —
-    * an unchecked rename inside a swap protocol can cascade into
-    * deleting the only surviving copy. Every swap rename goes through
-    * here and aborts loudly instead.
-    */
-  private def renameOrDie(fs: org.apache.hadoop.fs.FileSystem,
-                          src: org.apache.hadoop.fs.Path,
-                          dst: org.apache.hadoop.fs.Path): Unit =
-    require(fs.rename(src, dst), s"rename failed: $src -> $dst")
+  private def fileSystem(p: Path): FileSystem =
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   def readTable(name: String): DataFrame = spark.read.parquet(tablePath(name))
 
@@ -269,12 +145,9 @@ final class EtlPipeline(spark: SparkSession, warehouseDir: String) {
       .filter(tableExists)
       .map(n => graft.ops.Validate.health(n, readTable(n), Schemas.upsertKeys(n)))
 
-  def tableExists(name: String): Boolean = pathExists(tablePath(name))
-
-  private def pathExists(path: String): Boolean = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    fs.exists(new org.apache.hadoop.fs.Path(path))
+  def tableExists(name: String): Boolean = {
+    val p = new Path(tablePath(name))
+    fileSystem(p).exists(p)
   }
 
   /** Base-dictionaries phase (run-et-etl.py:13-29). */

@@ -250,11 +250,12 @@ object Schemas {
 
   /** Facts loaded O(delta): (source timestamp column → derived date
     * partition column). A daily sync then rewrites only the touched date
-    * partitions (dynamic partition overwrite) instead of the whole
-    * table — the difference between O(day) and O(100 TB) per sync. The
-    * date is stable per key (a session's start never moves), which is
-    * [[graft.ops.Upsert.upsertPartitioned]]'s contract. Children stay on
-    * the swap path: they carry no date column in the reference schema.
+    * partitions instead of the whole table — the difference between
+    * O(day) and O(100 TB) per sync. The date is stable per key (a
+    * session's start never moves), which is
+    * [[graft.ops.Upsert.upsertPartitioned]]'s contract. Children stay
+    * full-table rewrites: they carry no date column in the reference
+    * schema.
     */
   val partitionedFacts: Map[String, (String, String)] = Map(
     "sessions" -> (("start_dt", "start_date")))

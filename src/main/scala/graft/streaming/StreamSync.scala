@@ -45,9 +45,10 @@ object StreamSync {
     events.withWatermark(tsCol, delay).dropDuplicatesWithinWatermark(keys)
 
   /** Upsert sink: each micro-batch merges into the parquet target with
-    * source-wins semantics (Load.py:228-231), partition-scoped rewrites
-    * (see [[Upsert.upsertPartitioned]]). Exactly-once per key given the
-    * checkpoint + idempotent merge.
+    * source-wins semantics (Load.py:228-231) through
+    * [[Upsert.upsertPartitioned]], which commits every touched partition
+    * or none. Exactly-once per key given the checkpoint + idempotent
+    * merge: a micro-batch interrupted before its commit replays.
     */
   def upsertSink(
       updates: DataFrame, tablePath: String, keys: Seq[String],
@@ -60,7 +61,7 @@ object StreamSync {
       .foreachBatch { (batch: DataFrame, _: Long) =>
         // Empty triggers (e.g. the watermark-advance batch AvailableNow
         // appends) never touch the target — an empty merge would still
-        // list/stage/swap every affected partition. CONTRACT: the
+        // run a read and a staged write. CONTRACT: the
         // target table exists only after the first NON-empty batch (an
         // empty partitioned parquet table cannot carry a schema, so
         // "create empty on first trigger" would produce an unreadable

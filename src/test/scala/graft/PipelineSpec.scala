@@ -144,6 +144,15 @@ class PipelineSpec extends SparkSpec {
       spark.conf.set("spark.graft.etl.forceFullRewrite", "true")
       pipe.loadTable("agents", batch)
       assert(pipe.readTable("agents").count() === 3)
+      // a malformed value fails naming its key and the value, with no
+      // fallback to the default
+      Seq("spark.graft.etl.maxFullRewriteBytes" -> "64GB",
+        "spark.graft.etl.forceFullRewrite" -> "yes").foreach { case (key, bad) =>
+        spark.conf.set(key, bad)
+        val m = intercept[IllegalArgumentException] { pipe.loadTable("agents", batch) }
+        assert(m.getMessage.contains(key) && m.getMessage.contains(bad), m.getMessage)
+        spark.conf.unset(key)
+      }
     } finally {
       spark.conf.unset("spark.graft.etl.maxFullRewriteBytes")
       spark.conf.unset("spark.graft.etl.forceFullRewrite")
