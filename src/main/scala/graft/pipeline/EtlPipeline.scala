@@ -207,20 +207,19 @@ final class EtlPipeline(spark: SparkSession, warehouseDir: String) {
     Incremental.writeWatermark(watermarkPath, now)
   }
 
-  /** EP1 step 5 — the incremental late-data pass (run-et-etl.py:66-116):
+  /** EP1 step 5 — the incremental late-data pass (run-et-etl.py:66-116).
+    * One re-sync set, synced once: the sessions in `rawWindow` that
     *
-    *  1. re-upsert sessions in `rawWindow` that carry manual scores
-    *     ("is_scored,manual" filter: late QA reviews appear days after
-    *     the conversation, run-et-etl.py:84-93);
-    *  2. re-upsert sessions whose categories changed since the last
-    *     watermark (`updated_at`-driven invalidation,
-    *     run-et-etl.py:95-106) — here: sessions referencing a changed
-    *     category id.
+    *  - carry manual scores ("is_scored,manual" filter: late QA reviews
+    *    appear days after the conversation, run-et-etl.py:84-93), or
+    *  - reference a category updated since the last watermark
+    *    (`updated_at`-driven invalidation, run-et-etl.py:95-106; skipped
+    *    when no categories dimension was ever loaded).
     *
     * `rawWindow` IS the trailing re-extract: the caller bounds it (the
     * reference bounds at the source with a 30-day date filter; build the
     * predicate with [[Incremental.resyncWindow]] — with partition
-    * pruning that re-read is O(window)). Both passes are plain upserts,
+    * pruning that re-read is O(window)). The re-sync is a plain upsert,
     * so re-running is idempotent.
     */
   def runIncremental(
@@ -228,37 +227,26 @@ final class EtlPipeline(spark: SparkSession, warehouseDir: String) {
       watermarkPath: String,
       now: LocalDateTime,
       since: Option[LocalDateTime] = None): Unit = {
-    import org.apache.spark.sql.functions.{col, size => asize}
-    // `since` lets a caller that already advanced the watermark (e.g.
-    // runDaily earlier in the same run) pass the PREVIOUS sync point —
-    // reading the file after runDaily wrote `now` would make the
-    // changed-category pass a permanent no-op
-    val wm = since.getOrElse(Incremental.readWatermark(watermarkPath))
-
-    // pass 1: manually-scored sessions in the window
-    val manual = rawWindow.filter(asize(col("reviewers")) > 0)
-    syncSessions(manual)
-
-    // pass 2: sessions of categories updated since the watermark
-    // (skipped when no categories dimension was ever loaded)
-    if (!tableExists("categories")) {
-      Incremental.writeWatermark(watermarkPath, now)
-      return
-    }
-    val changedCats = Incremental.newerThan(
-      readTable("categories"), "updated_at", wm).select(col("id"))
-    val catRows = rawWindow
-      .select(col("id").as("__sid"),
-        org.apache.spark.sql.functions.explode(col("categories")).as("__c"))
-      .select(col("__sid"), col("__c.id").as("__cid"))
-    val invalidated = catRows
-      .join(org.apache.spark.sql.functions.broadcast(changedCats),
-        catRows("__cid") === changedCats("id"), "left_semi")
-      .select(col("__sid")).distinct()
-    val toResync = rawWindow.join(invalidated,
-      rawWindow("id") === invalidated("__sid"), "left_semi")
+    import org.apache.spark.sql.functions.{col, explode, size => asize}
+    val manual = asize(col("reviewers")) > 0
+    val toResync =
+      if (!tableExists("categories")) rawWindow.filter(manual)
+      else {
+        // `since` lets a caller that already advanced the watermark (e.g.
+        // runDaily earlier in the same run) pass the PREVIOUS sync point —
+        // reading the file after runDaily wrote `now` would make the
+        // changed-category selection a permanent no-op
+        val wm = since.getOrElse(Incremental.readWatermark(watermarkPath))
+        val pairs = rawWindow.select(col("id").as("__sid"), explode(col("categories.id")).as("__cid"))
+        // distinct ids, so the left join duplicates no window row
+        val invalidated = Incremental
+          .factsOfChangedDims(pairs, readTable("categories"), "__cid", "id", "updated_at", wm)
+          .select(col("__sid")).distinct()
+        rawWindow.join(invalidated, rawWindow("id") === invalidated("__sid"), "left")
+          .filter(manual || col("__sid").isNotNull)
+          .drop("__sid")
+      }
     syncSessions(toResync)
-
     Incremental.writeWatermark(watermarkPath, now)
   }
 }

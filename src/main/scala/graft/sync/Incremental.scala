@@ -1,10 +1,12 @@
 package graft.sync
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.charset.StandardCharsets.UTF_8
 import java.time.LocalDateTime
 import java.time.format.DateTimeFormatter
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Incremental-sync protocol (SURVEY.md §2.8, Q50–Q52).
@@ -22,23 +24,37 @@ object Incremental {
   private val fmt = DateTimeFormatter.ISO_LOCAL_DATE_TIME
 
   /** Watermark persistence (utils.py:20-38): ISO string in a file;
-    * LocalDateTime.MIN analog on first run. Written atomically
-    * (tmp + move) — the reference's plain overwrite can tear.
+    * LocalDateTime.MIN analog on first run. The filesystem comes from the
+    * path's scheme, like every table write. Written whole to a temp file
+    * that is renamed over the old one — the reference's plain overwrite
+    * can tear. A store whose rename refuses an existing target gets a
+    * delete first; a crash between the two leaves no watermark, which
+    * reads as the first-run default: the next re-sync is wider, never
+    * narrower.
     */
   def readWatermark(path: String): LocalDateTime = {
-    val p = Paths.get(path)
-    if (Files.exists(p)) LocalDateTime.parse(Files.readString(p).trim, fmt)
-    else LocalDateTime.of(1, 1, 1, 0, 0, 0)
+    val p = new Path(path)
+    val fs = fileSystem(p)
+    if (fs.exists(p)) {
+      val in = fs.open(p)
+      try LocalDateTime.parse(new String(in.readAllBytes(), UTF_8).trim, fmt)
+      finally in.close()
+    } else LocalDateTime.of(1, 1, 1, 0, 0, 0)
   }
 
   def writeWatermark(path: String, ts: LocalDateTime): Unit = {
-    val p = Paths.get(path)
-    if (p.getParent != null) Files.createDirectories(p.getParent)
-    val tmp = Paths.get(path + ".tmp")
-    Files.writeString(tmp, ts.format(fmt))
-    Files.move(tmp, p, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
+    val p = new Path(path)
+    val fs = fileSystem(p)
+    val tmp = p.suffix(".tmp")
+    val out = fs.create(tmp, true)
+    try out.write(ts.format(fmt).getBytes(UTF_8)) finally out.close()
+    if (!fs.rename(tmp, p) && !(fs.delete(p, false) && fs.rename(tmp, p)))
+      throw new java.io.IOException(s"cannot rename $tmp to $p")
   }
+
+  private def fileSystem(p: Path): FileSystem =
+    p.getFileSystem(SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
+      .fold(new Configuration())(_.sparkContext.hadoopConfiguration))
 
   /** Rows newer than the watermark (run-et-etl.py:99-100). On a
     * date-partitioned table this prunes partitions, so the re-read is

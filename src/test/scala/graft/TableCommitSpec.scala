@@ -23,6 +23,7 @@ class CrashFs extends RawLocalFileSystem {
   override def rename(src: Path, dst: Path): Boolean = {
     if (CrashFs.renames.incrementAndGet() == CrashFs.crashAt)
       throw new IOException(s"injected crash: rename $src -> $dst")
+    if (src.getParent.getName.startsWith(".graft_stage_")) CrashFs.promotions.incrementAndGet()
     super.rename(src, dst)
   }
 }
@@ -30,8 +31,12 @@ class CrashFs extends RawLocalFileSystem {
 object CrashFs {
   val Uri: URI = URI.create("crashfs:///")
   val renames = new AtomicInteger
+  /** Renames that moved a staged unit (a table or one of its partitions)
+    * into place since [[arm]]: one per unit a write commits.
+    */
+  val promotions = new AtomicInteger
   @volatile var crashAt = 0
-  def arm(k: Int): Unit = { renames.set(0); crashAt = k }
+  def arm(k: Int): Unit = { renames.set(0); promotions.set(0); crashAt = k }
   /** Disarm; returns the renames made since [[arm]]. */
   def disarm(): Int = { crashAt = 0; renames.get }
 }

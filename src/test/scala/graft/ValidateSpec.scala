@@ -89,6 +89,13 @@ class ValidateSpec extends SparkSpec {
       ("v", 3L, 1L, 3L, "1.0", "3.0", Some(2.0))))
   }
 
+  test("profile's exact distinct folds -0.0 into 0.0 and counts NaNs as one value") {
+    val df = Seq(-0.0, 0.0, Double.NaN, Double.NaN).toDF("v")
+    val got = Validate.profile(df, exactDistinct = true)
+      .select("n_distinct", "min_s").as[(Long, String)].collect()
+    assert(got === Array((2L, "0.0")))
+  }
+
   test("madOutliers flags the long tail without letting it move the baseline") {
     // 100 values near 10, one extreme outlier; mean/stddev z-score
     // would drag the threshold toward the outlier — the median doesn't
