@@ -303,6 +303,11 @@ object Behavior {
     * oracle. `maxBasketSize` drops degenerate mega-baskets (a crawler
     * session with 10k "items" would alone contribute 10⁸ pairs).
     *
+    * Null items are dropped before the cap applies: they never count
+    * toward `maxBasketSize`, never appear in a pair or an item count,
+    * so a basket {a, b, null} under `maxBasketSize = 2` is kept and
+    * yields the pair (a, b).
+    *
     * The per-item count frames are explicitly broadcast: they are
     * bounded by the item VOCABULARY (not the row count), and the static
     * planner can't see that — its estimate for an aggregate over the

@@ -248,8 +248,9 @@ object Linkage {
           c.substr(i + lit(1), length(c)))))
     // signature generation (|s|+1 deletion variants per row) is the
     // compute-dense narrow step — floor so a single-split scan doesn't
-    // serialize it (QueryProbe: x_er_cluster's 1.25 s of pair-gen task
-    // time ran on 2 tasks); structural no-op at scale
+    // serialize it (a per-job listener trace, OPTIMIZATION_r18.md:
+    // x_er_cluster's 1.25 s of pair-gen task time ran on 2 tasks);
+    // structural no-op at scale
     val lSig = graft.ops.Par.floor(left)
       .withColumn("__dl_sig", explode(sigs(col(leftCol))))
     val rSig = graft.ops.Par.floor(right)

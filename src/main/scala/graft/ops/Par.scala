@@ -9,9 +9,9 @@ import org.apache.spark.sql.catalyst.plans.logical._
   * cannot split: every narrow transform chained onto such a scan —
   * shingle/n-gram explodes, deletion-neighborhood signatures, vector
   * kernels, multi-distinct expands — runs in 1-3 tasks while the other
-  * cores idle (measured via QueryProbe: q_profile spent 2.2 s of its
-  * 2.4 s in ONE task; x_er_cluster's pair generation ran 1.25 s of
-  * task time on 2 tasks). This is the optimization guide's §2.5 "input
+  * cores idle (a per-job listener trace, OPTIMIZATION_r18.md: q_profile
+  * spent 2.2 s of its 2.4 s in ONE task; x_er_cluster's pair generation
+  * ran 1.25 s of task time on 2 tasks). This is the optimization guide's §2.5 "input
   * skew: one huge unsplittable file … repartition immediately after
   * the read".
   *

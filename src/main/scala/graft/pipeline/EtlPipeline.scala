@@ -1,9 +1,11 @@
 package graft.pipeline
 
 import java.time.LocalDateTime
+import java.util.concurrent.{ConcurrentLinkedQueue, ExecutionException, Executors}
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.storage.StorageLevel
 
 import graft.ops.Upsert
 import graft.schema.Schemas
@@ -16,9 +18,12 @@ import graft.sync.Incremental
   * parquet warehouse directory via keyed source-wins upsert.
   *
   * The reference's per-row SQL loop (Load.py:102-162) becomes one
-  * distributed merge per table; its sequential phase ordering stays an
-  * orchestration-layer concern (dims → facts), exactly as SURVEY.md §3
-  * prescribes.
+  * distributed merge per table. Its phase ordering stays an
+  * orchestration-layer concern (SURVEY.md §3): the phases run one after
+  * another — dims, then sessions, then the watermark — while the
+  * independent tables of one phase load concurrently. Each table
+  * commits on its own through [[TableCommit]], which works per target,
+  * so concurrent loads of different tables do not interfere.
   */
 final class EtlPipeline(spark: SparkSession, warehouseDir: String) {
 
@@ -29,7 +34,23 @@ final class EtlPipeline(spark: SparkSession, warehouseDir: String) {
     * reconciled against the declared schema (Load.py:91-99) when one is
     * declared for the table.
     */
-  def loadTable(name: String, batch: DataFrame): Unit = {
+  def loadTable(name: String, batch: DataFrame): Unit =
+    described(s"graft load $name")(merge(name, batch))
+
+  private val JobDescription = "spark.job.description"
+
+  /** Runs `body` with its jobs described as `description`, so the jobs
+    * of interleaved loads can be told apart. The previous description
+    * is restored afterwards; the job group is left alone.
+    */
+  private def described[T](description: String)(body: => T): T = {
+    val sc = spark.sparkContext
+    val previous = sc.getLocalProperty(JobDescription)
+    sc.setJobDescription(description)
+    try body finally sc.setLocalProperty(JobDescription, previous)
+  }
+
+  private def merge(name: String, batch: DataFrame): Unit = {
     val keys = Schemas.upsertKeys.getOrElse(name, Seq("id"))
     val reconciled = Schemas.all.get(name) match {
       case Some(schema) =>
@@ -150,53 +171,93 @@ final class EtlPipeline(spark: SparkSession, warehouseDir: String) {
     fileSystem(p).exists(p)
   }
 
-  /** Base-dictionaries phase (run-et-etl.py:13-29). */
-  def syncBaseDicts(raw: Map[String, DataFrame]): Unit = {
-    raw.get("agents").foreach { a =>
-      val (dim, assoc) = Transform.agents(a)
-      loadTable("agents", dim); loadTable("agent_group_associations", assoc)
+  /** Runs independent table loads concurrently and returns once every
+    * one has finished and every pool thread has ended. The pool is made
+    * per call, so its threads start from the caller's thread and
+    * inherit its local properties (job group, active session); it has
+    * min(loads, default parallelism) threads. When a load fails the
+    * others still run to their end, and the first failure in `loads`
+    * order is rethrown with the rest suppressed on it: no write
+    * outlives the call.
+    */
+  private def loadConcurrently(loads: Seq[(String, DataFrame)]): Unit = if (loads.nonEmpty) {
+    val threads = new ConcurrentLinkedQueue[Thread]
+    val pool = Executors.newFixedThreadPool(
+      math.min(loads.size, spark.sparkContext.defaultParallelism),
+      { r =>
+        val t = new Thread(r, s"graft-load-${threads.size + 1}")
+        t.setDaemon(true)
+        threads.add(t)
+        t
+      })
+    try {
+      val pending = loads.map { case (name, df) => pool.submit[Unit](() => loadTable(name, df)) }
+      val failures = pending.flatMap { f =>
+        try { f.get(); None }
+        catch { case e: ExecutionException => Some(e.getCause) }
+      }
+      failures.headOption.foreach { first =>
+        failures.tail.foreach(first.addSuppressed)
+        throw first
+      }
+    } finally {
+      pool.shutdown()
+      threads.forEach(_.join())
     }
-    raw.get("scorecards").foreach { sc =>
-      val (dim, cats, points) = Transform.scorecards(sc)
-      loadTable("scorecards", dim)
-      loadTable("scorecard_categories", cats)
-      loadTable("scorecard_points", points)
-    }
-    raw.get("groups").foreach(g => loadTable("groups", Transform.groups(g)))
-    raw.get("labels").foreach(l => loadTable("labels", Transform.labels(l)))
-    raw.get("categories").foreach { c =>
-      val (dim, labels) = Transform.categories(c)
-      loadTable("categories", dim)
-      labels.foreach(loadTable("category_labels", _))
-    }
-    raw.get("tags").foreach { tg =>
-      val (dim, tl) = Transform.tags(tg)
-      loadTable("tags", dim)
-      tl.foreach(loadTable("tag_labels", _))
-    }
-    raw.get("users").foreach(u => loadTable("users", Transform.users(u)))
   }
 
-  /** Sessions phase (run-et-etl.py:32-63). Empty extract short-circuits
+  /** Base-dictionaries phase (run-et-etl.py:13-29): every dimension
+    * table is independent of the others, so all of them load at once.
+    * The dictionaries are not cached: each is a few pages, and the job
+    * that would fill a cache costs about what the re-read saves.
+    */
+  def syncBaseDicts(raw: Map[String, DataFrame]): Unit = loadConcurrently(raw.toSeq.flatMap {
+    case ("agents", a) =>
+      val (dim, assoc) = Transform.agents(a)
+      Seq("agents" -> dim, "agent_group_associations" -> assoc)
+    case ("scorecards", sc) =>
+      val (dim, cats, points) = Transform.scorecards(sc)
+      Seq("scorecards" -> dim, "scorecard_categories" -> cats, "scorecard_points" -> points)
+    case ("groups", g) => Seq("groups" -> Transform.groups(g))
+    case ("labels", l) => Seq("labels" -> Transform.labels(l))
+    case ("categories", c) =>
+      val (dim, labels) = Transform.categories(c)
+      Seq("categories" -> dim) ++ labels.map("category_labels" -> _)
+    case ("tags", tg) =>
+      val (dim, tl) = Transform.tags(tg)
+      Seq("tags" -> dim) ++ tl.map("tag_labels" -> _)
+    case ("users", u) => Seq("users" -> Transform.users(u))
+    case _ => Nil
+  })
+
+  /** Sessions phase (run-et-etl.py:32-63). The input is parsed once: it
+    * is persisted at MEMORY_AND_DISK and filled by one `count()` before
+    * any table is written, the 8 session tables are derived from that
+    * cache and load concurrently, and the cache is dropped when the
+    * phase ends, failed or not. An empty extract short-circuits
     * (run-et-etl.py:54-55 — intent, not the truthy-string bug).
     */
   def syncSessions(rawSessions: DataFrame): Unit = {
-    if (rawSessions.isEmpty) return
-    val t = Transform.sessions(rawSessions)
-    loadTable("sessions", t.sessions)
-    loadTable("sessions_tags", t.tags)
-    loadTable("sessions_categories", t.categories)
-    loadTable("sessions_reviewers", t.reviewers)
-    t.scores.foreach(loadTable("sessions_scores", _))
-    // key is session_id only: a session with several comments would put
-    // duplicate keys in one batch, violating upsert's precondition —
-    // keep the LAST comment by array position (the reference's
-    // sequential merge lands on the same row)
-    loadTable("sessions_comments",
-      Upsert.dedupLastWins(t.comments, Seq("session_id"), "comment_pos")
-        .drop("comment_pos"))
-    loadTable("sessions_summaries", t.summaries)
-    loadTable("sessions_crm_statuses", t.crmStatuses)
+    // a frame the caller cached stays the caller's to drop
+    val owned = rawSessions.storageLevel == StorageLevel.NONE
+    val raw = if (owned) rawSessions.persist(StorageLevel.MEMORY_AND_DISK) else rawSessions
+    try {
+      val rows = described("graft load sessions and its child tables: read source")(raw.count())
+      if (rows > 0) {
+        val t = Transform.sessions(raw)
+        // key is session_id only: a session with several comments would
+        // put duplicate keys in one batch, violating upsert's
+        // precondition — keep the LAST comment by array position (the
+        // reference's sequential merge lands on the same row)
+        val comments = Upsert.dedupLastWins(t.comments, Seq("session_id"), "comment_pos")
+          .drop("comment_pos")
+        loadConcurrently(Seq("sessions" -> t.sessions, "sessions_tags" -> t.tags,
+            "sessions_categories" -> t.categories, "sessions_reviewers" -> t.reviewers) ++
+          t.scores.map("sessions_scores" -> _) ++
+          Seq("sessions_comments" -> comments, "sessions_summaries" -> t.summaries,
+            "sessions_crm_statuses" -> t.crmStatuses))
+      }
+    } finally if (owned) raw.unpersist(blocking = true)
   }
 
   /** Full daily run (EP1): dims → facts → watermark. */

@@ -54,9 +54,9 @@ private[graft] object Fixtures {
   /** Memoized table handle per (session, path): `spark.read.parquet`
     * runs a footer schema-inference job (plus file listing) on EVERY
     * call, and the registry re-reads the same 10 read-only driver
-    * tables thousands of times per bench/verify JVM — QueryProbe
-    * measured the q_sql_* rows as 12-14 such one-task micro-jobs each
-    * (≈ half their job count). The memo reuses the resolved
+    * tables thousands of times per bench/verify JVM — a per-job
+    * listener trace (OPTIMIZATION_r19.md) measured the q_sql_* rows as
+    * 12-14 such one-task micro-jobs each (≈ half their job count). The memo reuses the resolved
     * DataFrame's schema + file index; it caches NO data and NO results
     * (the plan re-executes on every action) — the same metadata-reuse
     * class as the guide §6 file-listing cache and the heartbeat/nested

@@ -359,6 +359,17 @@ class BehaviorSpec extends SparkSpec {
     assert(r.getLong(2) === 2L) // both baskets pair (x, y)
   }
 
+  test("coOccurrence: at the cap boundary a null item neither counts nor pairs") {
+    // {a, b, null} with maxBasketSize = 2: the null does not push the
+    // basket over the cap; {c, d, e} is over it and is dropped whole,
+    // so it counts toward no item and toward no basket total either
+    val rows: Seq[(Long, String)] =
+      Seq((1L, "a"), (1L, "b"), (1L, null), (2L, "c"), (2L, "d"), (2L, "e"))
+    val out = Behavior.coOccurrence(rows.toDF("b", "i"), "b", "i", maxBasketSize = 2)
+      .collect().map(_.toSeq)
+    assert(out.toSeq === Seq(Seq("a", "b", 1L, 1L, 1L, 1.0)))
+  }
+
   test("coOccurrence: broadcastItemCounts=false degrades the count joins " +
        "to non-broadcast (unbounded-vocab escape hatch)") {
     val df = Seq((1L, "x"), (1L, "y"), (2L, "x"), (2L, "y")).toDF("b", "i")
