@@ -161,11 +161,13 @@ object Layout {
                                     filesAfter: Int, bytesAfter: Long)
 
   /** Bin-pack a parquet directory's data files into ≈`targetBytes`
-    * outputs — the OPTIMIZE step every incremental sink needs: daily
-    * upserts and streaming micro-batches accrete small files until
-    * footer/open overhead dominates scans (the classic small-file
-    * problem at 100 TB: a 128 MB-row-group design degenerating into
-    * millions of 1 MB files).
+    * outputs — the OPTIMIZE step for a directory whose files are smaller
+    * than scans want (the classic small-file problem at 100 TB: a
+    * 128 MB-row-group design degenerating into millions of 1 MB files).
+    * Graft's own merges do not accrete files: each rewrites a touched
+    * partition or table as one file under adaptive execution
+    * ([[graft.sink.TableCommit.rightSized]]). This is for data written
+    * otherwise, or with adaptive execution off.
     *
     * `shuffle=false` (default) coalesces — a NARROW rewrite, no
     * shuffle: adjacent input splits concatenate into fewer files.

@@ -29,7 +29,12 @@ import graft.sink.TableCommit
   * are, and AQE converts the anti-join to broadcast at runtime when the
   * updates side is small. For a table on disk, partition the target by
   * date so a daily upsert rewrites only touched partitions
-  * ([[upsertPartitioned]]).
+  * ([[upsertPartitioned]]). That merge reads only the touched partition
+  * directories, with no job to list the table or infer its schema, and
+  * rebalances its write by the partition column, so adaptive execution
+  * writes one file per touched partition however many splits the
+  * inputs had ([[graft.sink.TableCommit.readPartitions]],
+  * [[graft.sink.TableCommit.rightSized]]).
   */
 object Upsert {
 
@@ -105,24 +110,21 @@ object Upsert {
     // explicit existence check: a transient read failure must abort the
     // merge (rethrowing), not silently drop pre-existing partition rows
     if (!TableCommit.recover(spark, tablePath))
-      TableCommit.replaceTable(updates, tablePath, Some(partitionCol))
+      TableCommit.replaceTable(TableCommit.rightSized(updates, Some(partitionCol)), tablePath,
+        Some(partitionCol))
     else {
-      // O(distinct partition values in the batch) at the driver —
-      // bounded by construction for date-partitioned daily syncs
-      val touched = updates.select(partitionCol).distinct().collect().map(_.get(0))
-      // null partition values land in the default partition and are
-      // replaced with it — `isin` would silently skip them (null never
-      // matches), dropping pre-existing null-partition rows
-      val (nullTouched, valsTouched) = touched.partition(_ == null)
-      val touchedPred = {
-        val in =
-          if (valsTouched.nonEmpty) Some(col(partitionCol).isin(valsTouched.toIndexedSeq: _*))
-          else None
-        val nl = if (nullTouched.nonEmpty) Some(col(partitionCol).isNull) else None
-        (in ++ nl).reduceOption(_ || _).getOrElse(lit(false))
-      }
-      val existing = spark.read.parquet(tablePath).filter(touchedPred)
-      TableCommit.replacePartitions(upsert(existing, updates, keys), tablePath, partitionCol)
+      // the touched partitions as the write names them (null is the
+      // default partition): O(distinct partition values in the batch) at
+      // the driver — bounded by construction for date-partitioned daily
+      // syncs. Only those directories are read, and no job infers their
+      // schema.
+      val touched = updates.select(col(partitionCol).cast("string")).distinct().collect()
+        .map(_.getString(0)).toSeq
+      val existing =
+        TableCommit.readPartitions(spark, tablePath, updates.schema(partitionCol), touched)
+      TableCommit.replacePartitions(
+        TableCommit.rightSized(upsert(existing, updates, keys), Some(partitionCol)),
+        tablePath, partitionCol)
     }
   }
 }

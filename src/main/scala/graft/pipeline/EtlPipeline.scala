@@ -24,6 +24,14 @@ import graft.sync.Incremental
   * independent tables of one phase load concurrently. Each table
   * commits on its own through [[TableCommit]], which works per target,
   * so concurrent loads of different tables do not interfere.
+  *
+  * Scale: a load's cost follows the batch, not the stored table's files.
+  * Reading the target runs no Spark job ([[TableCommit.read]]): the
+  * schema comes from one footer, and the partitioned merge lists only
+  * the partitions the batch touches. Every write is rebalanced
+  * ([[TableCommit.rightSized]]), so under adaptive execution a full
+  * rewrite of a small table writes one file and a partitioned merge one
+  * per touched partition, split only above the advisory size.
   */
 final class EtlPipeline(spark: SparkSession, warehouseDir: String) {
 
@@ -96,9 +104,9 @@ final class EtlPipeline(spark: SparkSession, warehouseDir: String) {
     val path = tablePath(name)
     val withP = batch.withColumn(pCol, to_date(col(srcCol)))
     if (TableCommit.recover(spark, path) && !partitionedBy(path, pCol)) {
-      val existing = spark.read.parquet(path)
-        .withColumn(pCol, to_date(col(srcCol)))
-      TableCommit.replaceTable(Upsert.upsert(existing, withP, keys), path, Some(pCol))
+      val existing = TableCommit.read(spark, path).withColumn(pCol, to_date(col(srcCol)))
+      val merged = Upsert.upsert(existing, withP, keys)
+      TableCommit.replaceTable(TableCommit.rightSized(merged, Some(pCol)), path, Some(pCol))
     } else Upsert.upsertPartitioned(spark, path, withP, keys, pCol)
   }
 
@@ -114,7 +122,7 @@ final class EtlPipeline(spark: SparkSession, warehouseDir: String) {
     // existence is checked explicitly — a transient READ failure must
     // abort the merge, not silently replace the table with the batch
     val existing =
-      if (TableCommit.recover(spark, path)) Some(spark.read.parquet(path)) else None
+      if (TableCommit.recover(spark, path)) Some(TableCommit.read(spark, path)) else None
     // GUARDRAIL: a full-table rewrite is O(table), not O(delta) — at
     // warehouse scale a daily sync through this path rewrites the whole
     // table every day. Tables above the size threshold REFUSE the
@@ -138,7 +146,7 @@ final class EtlPipeline(spark: SparkSession, warehouseDir: String) {
             "spark.graft.etl.forceFullRewrite=true for a deliberate one-off.")
     }
     val merged = existing.fold(reconciled)(Upsert.upsert(_, reconciled, keys))
-    TableCommit.replaceTable(merged, path)
+    TableCommit.replaceTable(TableCommit.rightSized(merged, None), path)
   }
 
   /** A malformed value fails naming the key and the value; it never
@@ -153,7 +161,8 @@ final class EtlPipeline(spark: SparkSession, warehouseDir: String) {
   private def fileSystem(p: Path): FileSystem =
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  def readTable(name: String): DataFrame = spark.read.parquet(tablePath(name))
+  /** A stored table, read with no Spark job ([[TableCommit.read]]). */
+  def readTable(name: String): DataFrame = TableCommit.read(spark, tablePath(name))
 
   /** Post-load integrity audit over every materialized table: key
     * uniqueness + null keys per the declared constraints

@@ -169,6 +169,7 @@ class PhaseLoadSpec extends SparkSpec {
     val failure = rootCause(intercept[Exception](pipe.runDaily(dicts, revised, wm, next)))
     assert(failure.getClass === cause.getClass)
     assert(failure.getMessage === cause.getMessage)
+    assert(failure.getMessage.contains("sessions_summaries"), failure.getMessage)
 
     assert(Files.readAllBytes(Paths.get(wm)).sameElements(watermark), "watermark moved")
     val live = Thread.getAllStackTraces.keySet.asScala.filter(_.getName.startsWith("graft-load-"))

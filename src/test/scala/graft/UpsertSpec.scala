@@ -80,4 +80,37 @@ class UpsertSpec extends SparkSpec {
     assert(out === Array(
       (1, 1.0, "2024-01-01"), (2, 22.0, "2024-01-02"), (3, 3.0, "2024-01-02")))
   }
+
+  test("upsertPartitioned reads only touched partitions: null, escaped and new values") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-upsert-touched").toString + "/t"
+    // `p` needs escaping in a directory name; null is the default partition
+    val odd = "x/y=z:1%"
+    val init = Seq[(Int, String, Double)]((1, "a", 1.0), (2, null, 2.0), (3, odd, 3.0),
+      (4, "kept", 4.0)).toDF("id", "p", "v")
+    init.write.partitionBy("p").parquet(dir)
+    val batches = Seq(
+      Seq[(Int, String, Double)]((2, null, 22.0), (5, null, 5.0), (3, odd, 33.0), (6, "new", 6.0)),
+      Seq[(Int, String, Double)]((6, "new", 66.0), (7, "new", 7.0), (1, "a", 11.0)))
+    /** Data files of each partition directory, with their mtimes. */
+    def files(): Map[String, Set[(String, Long)]] =
+      new java.io.File(dir).listFiles.filter(_.isDirectory).map { d =>
+        d.getName -> d.listFiles.filter(_.getName.startsWith("part-"))
+          .map(f => f.getName -> f.lastModified).toSet
+      }.toMap
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select(col("id"), col("p").cast("string"), col("v")).as[(Int, String, Double)]
+        .collect().sortBy(_._1).toSeq
+    var expected = init
+    batches.zip(Seq(Set("p=a", "p=kept"),
+        Set("p=__HIVE_DEFAULT_PARTITION__", "p=kept", "p=x%2Fy%3Dz%3A1%25")))
+      .foreach { case (rows0, untouched) =>
+        val before = files()
+        val updates = rows0.toDF("id", "p", "v")
+        Upsert.upsertPartitioned(spark, dir, updates, Seq("id"), "p")
+        expected = Upsert.upsert(expected, updates, Seq("id")).localCheckpoint()
+        assert(rows(spark.read.parquet(dir)) === rows(expected))
+        untouched.foreach(d => assert(files()(d) === before(d), d))
+      }
+    assert(rows(expected).map(_._3) === Seq(11.0, 22.0, 33.0, 4.0, 5.0, 66.0, 7.0))
+  }
 }
